@@ -34,7 +34,8 @@ import graft.sources.{CsvIngest, ParquetSink, S3Conf}
   * reference silently skips a whole file on one bad row; here bad
   * *values* become NULLs (PERMISSIVE) and the file survives. Strict
   * per-file isolation is available via `preserveFileNames = true`,
-  * which runs one small job per input file (reference scale only).
+  * which runs one small job per input file (reference scale only);
+  * there a failed file fails the run once every file was attempted.
   */
 object ConvertPipeline extends Logging {
 
@@ -97,22 +98,31 @@ object ConvertPipeline extends Logging {
     Files.createDirectories(Paths.get(cfg.parquetDir))
     if (cfg.preserveFileNames) {
       // 1:1 naming parity (P9): x.csv → x.parquet, one small job per
-      // file; a failure converts that file only (reference X1
-      // isolation), others continue.
-      csvs.flatMap { csv =>
+      // file. A failing file does not stop the others (reference X1
+      // isolation), but the stage then fails, naming every failed
+      // file, so a partial set is never uploaded.
+      val (failed, produced) = csvs.partitionMap { csv =>
         val name = Paths.get(csv).getFileName.toString
           .replaceAll("(?i)\\.csv$", ".parquet")
         val target = s"${cfg.parquetDir}/$name"
         try {
           val df = CsvIngest.read(spark, csv, cfg.schema)
           ParquetSink.writeSingleFile(df, target)
-          Some(target)
+          Right(target)
         } catch {
           case e: Exception =>
             logError(s"failed to convert $csv: ${e.getMessage}")
-            None
+            Left(csv -> e)
         }
       }
+      if (failed.nonEmpty) {
+        val err = new java.io.IOException(
+          s"${failed.size} of ${csvs.size} CSV file(s) failed to " +
+          s"convert: ${failed.map(_._1).mkString(", ")}")
+        failed.foreach { case (_, e) => err.addSuppressed(e) }
+        throw err
+      }
+      produced
     } else {
       // Scale path: one distributed job over all files.
       val df = CsvIngest.readAll(spark, csvs, cfg.schema)
@@ -187,11 +197,8 @@ object ConvertPipeline extends Logging {
   def main(args: Array[String]): Unit = {
     val propsPath = args.lift(0).getOrElse("application.properties")
     val schemaPath = args.lift(1).getOrElse("schema.json")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-convert")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"), "graft-convert")
     try run(spark, configFrom(loadProperties(propsPath), schemaPath))
     finally spark.stop()
   }

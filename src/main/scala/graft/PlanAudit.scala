@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump formatted physical plans for selected queries and
@@ -47,17 +46,7 @@ object PlanAudit {
     val write = flags.contains("--write")
     val sfDir = pos.lift(0).getOrElse("/root/testdata/sf0.01")
     val only = pos.lift(1).filterNot(_ == "all").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // A hash(k1) exchange may serve a (k1, k2) join (subset-key
-      // co-partitioning — Spark made the conservative choice the
-      // default in 3.4); the engine's shared-exchange plans rely on it.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("local[8]", "graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     val inventory = scala.collection.mutable.TreeMap.empty[String, Seq[String]]
     var failures = 0
@@ -108,21 +97,23 @@ object PlanAudit {
 
     def pairs(m: collection.Map[String, Seq[String]]): Set[(String, String)] =
       m.toSeq.flatMap { case (g, es) => es.map(g -> _) }.toSet
+    val snapFile = java.nio.file.Paths.get(InventoryPath)
+    def snapshot(): Map[String, Seq[String]] =
+      scala.io.Source.fromFile(snapFile.toFile, "UTF-8")
+        .getLines().filterNot(l => l.startsWith("#") || l.isEmpty)
+        .map { l =>
+          val Array(g, es) = l.split("\t", 2)
+          g -> es.split(",").toSeq
+        }.toMap
     if (write) {
       // Subset-aware merge (round-11 ADVICE): a --write with a gate
       // subset must not truncate the full inventory — fresh entries
       // REPLACE the scanned gates' snapshot rows (including deleting
       // a scanned gate that went clean), every unscanned gate's row
       // is carried over verbatim.
-      val snapFile = java.nio.file.Paths.get(InventoryPath)
       val carried: Seq[(String, Seq[String])] =
         if (only.isDefined && java.nio.file.Files.exists(snapFile))
-          scala.io.Source.fromFile(snapFile.toFile, "UTF-8")
-            .getLines().filterNot(l => l.startsWith("#") || l.isEmpty)
-            .map { l =>
-              val Array(g, es) = l.split("\t", 2)
-              g -> es.split(",").toSeq
-            }.filterNot { case (g, _) => inventory.contains(g) }.toSeq
+          snapshot().filterNot { case (g, _) => inventory.contains(g) }.toSeq
         else Seq.empty
       val merged = (carried ++ inventory.toSeq).sortBy(_._1)
       val lines = merged.collect {
@@ -137,15 +128,9 @@ object PlanAudit {
         s"carried) to $InventoryPath")
     }
     if (strict) {
-      val snapFile = java.nio.file.Paths.get(InventoryPath)
       require(java.nio.file.Files.exists(snapFile),
         s"--strict needs $InventoryPath; generate with --write")
-      val snap = scala.io.Source.fromFile(snapFile.toFile, "UTF-8")
-        .getLines().filterNot(l => l.startsWith("#") || l.isEmpty)
-        .map { l =>
-          val Array(g, es) = l.split("\t", 2)
-          g -> es.split(",").toSeq
-        }.toMap
+      val snap = snapshot()
       // Only diff gates actually scanned this run (subset runs stay
       // usable); a NEW pair is a hard failure, a vanished pair is
       // stale-snapshot info.

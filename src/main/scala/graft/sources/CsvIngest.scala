@@ -14,12 +14,14 @@ import org.apache.spark.sql.types._
   *     (`CsvToParquetConverter.java:160-163`); a short row's missing
   *     trailing cells behave the same (read as null);
   *   - INT32/INT64 → integer parse; DATE → ISO `yyyy-MM-dd`;
-  *   - TIMESTAMP_MICROS → multi-format parse: fractional seconds of
-  *     9, 6 or 3 digits tried in order (`CsvToParquetConverter.java:
-  *     42-46,129-142`), **plus** a fraction-less `yyyy-MM-dd HH:mm:ss`
-  *     — the documented superset (SURVEY §1: the reference's own
-  *     sample CSVs are fraction-less and its formatters reject them);
-  *     values are naive local datetimes kept in UTC (TimestampNTZ);
+  *   - TIMESTAMP_MICROS → one parse with [[TimestampPattern]]. A run
+  *     of n `S` reads 1 to n fraction digits, so it takes the
+  *     reference's 9-, 6- and 3-digit formatters
+  *     (`CsvToParquetConverter.java:42-46,129-142`) **plus** the
+  *     fraction-less `yyyy-MM-dd HH:mm:ss` — the documented superset
+  *     (SURVEY §1: the reference's own sample CSVs are fraction-less
+  *     and its formatters reject them); values are naive local
+  *     datetimes kept in UTC (TimestampNTZ);
   *   - DECIMAL(p,s) → lenient parse, HALF_UP rescale, invalid → NULL
   *     (`CsvToParquetConverter.java:187-195`).
   *
@@ -37,13 +39,9 @@ import org.apache.spark.sql.types._
   */
 object CsvIngest {
 
-  /** Timestamp input patterns, tried in order (reference order, plus
-    * the fraction-less superset form last). */
-  val TimestampPatterns: Seq[String] = Seq(
-    "yyyy-MM-dd HH:mm:ss.SSSSSSSSS",
-    "yyyy-MM-dd HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd HH:mm:ss.SSS",
-    "yyyy-MM-dd HH:mm:ss")
+  /** Timestamp input pattern: an optional fraction of 1 to 9 digits
+    * (nanoseconds truncate to the microsecond type). */
+  val TimestampPattern = "yyyy-MM-dd HH:mm:ss[.SSSSSSSSS]"
 
   /** SQL expression casting raw string column `c` to `dt` (P2–P7). */
   def castSql(c: String, dt: DataType, strict: Boolean = false): String = {
@@ -56,11 +54,8 @@ object CsvIngest {
       case LongType    => cast("BIGINT")
       case DateType    => cast("DATE") // ISO yyyy-MM-dd
       case TimestampNTZType | TimestampType =>
-        val tries = TimestampPatterns
-          .map(p => s"TRY_TO_TIMESTAMP($cell, '$p')")
-          .mkString("COALESCE(", ", ", s", CAST(NULL AS TIMESTAMP))")
         val target = if (dt == TimestampNTZType) "TIMESTAMP_NTZ" else "TIMESTAMP"
-        s"CAST($tries AS $target)"
+        s"CAST(TRY_TO_TIMESTAMP($cell, '$TimestampPattern') AS $target)"
       case d: DecimalType =>
         // Lenient even in strict mode — the reference's decimal path
         // warns + nulls rather than aborting (P6).
@@ -217,13 +212,8 @@ object CsvIngest {
     val cell = when(trim(raw) === "", lit(null).cast(StringType))
       .otherwise(raw)
     dt match {
-      case TimestampNTZType =>
-        coalesce(TimestampPatterns.map(p =>
-          try_to_timestamp(cell, lit(p)).cast(TimestampNTZType)) :+
-          lit(null).cast(TimestampNTZType): _*)
-      case TimestampType =>
-        coalesce(TimestampPatterns.map(p => try_to_timestamp(cell, lit(p))) :+
-          lit(null).cast(TimestampType): _*)
+      case TimestampNTZType | TimestampType =>
+        try_to_timestamp(cell, lit(TimestampPattern)).cast(dt)
       case other => cell.try_cast(other)
     }
   }

@@ -137,6 +137,33 @@ class ConvertPipelineSpec extends SparkSpec {
     } finally hc.unset("fs.s3a.impl")
   }
 
+  test("a failed file fails run after the others convert; nothing uploads") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.s3a.impl", classOf[MockS3AFileSystem].getName)
+    try {
+      val dir = tmpDir("conv_fail_src")
+      Files.write(Paths.get(dir, "a.csv"),
+        "id,name,age\n1,Alice,25".getBytes("UTF-8"))
+      Files.write(Paths.get(dir, "b.csv"),
+        "id,name,age\n2,Bob,30".getBytes("UTF-8"))
+      val out = tmpDir("conv_fail_out")
+      // a non-empty directory where b's single file must land: the
+      // final move fails for b.csv only
+      Files.createDirectories(Paths.get(out, "b.parquet"))
+      Files.write(Paths.get(out, "b.parquet", "keep"), Array[Byte](1))
+      val bucketRoot = tmpDir("mock_bucket_fail")
+      val key = bucketRoot.stripPrefix("/") + "/upload"
+      val cfg = ConvertPipeline.Config(dir, out,
+        graft.schema.SchemaLoader.fromJson(schemaJson),
+        s3 = Some(S3Conf.S3Settings(bucket = "test-bucket", prefix = key)))
+      val ex = intercept[java.io.IOException](ConvertPipeline.run(spark, cfg))
+      assert(ex.getMessage.contains("b.csv"), ex.getMessage)
+      assert(!ex.getMessage.contains("a.csv"), ex.getMessage)
+      assert(spark.read.parquet(s"$out/a.parquet").count() == 1)
+      assert(new java.io.File(bucketRoot).list().isEmpty)
+    } finally hc.unset("fs.s3a.impl")
+  }
+
   test("S3 settings land in hadoopConfiguration as fs.s3a.* (K3)") {
     S3Conf.configure(spark, S3Conf.S3Settings(
       bucket = "bkt", prefix = "pre",

@@ -73,12 +73,31 @@ class CsvIngestSpec extends SparkSpec {
       "1,a,1,1.00,2020-01-01,2023-01-01 12:00:00.123456789,1.00,1",
       "2,b,2,2.00,2020-01-02,2023-01-01 12:00:00.123456,2.00,2",
       "3,c,3,3.00,2020-01-03,2023-01-01 12:00:00.123,3.00,3",
-      "4,d,4,4.00,2020-01-04,2023-01-01 12:00:00,4.00,4")
+      "4,d,4,4.00,2020-01-04,2023-01-01 12:00:00,4.00,4",
+      "5,e,5,5.00,2020-01-05,2023-01-01 12:00:00.5,5.00,5",
+      "6,f,6,6.00,2020-01-06,2023-01-01 12:00:00.12,6.00,6",
+      "7,g,7,7.00,2020-01-07,2023-01-01 12:00:00.1234567,7.00,7",
+      // every row below is NULL: not one accepted form
+      "8,h,8,8.00,2020-01-08,2023-01-01 12:00:00.,8.00,8",
+      "9,i,9,9.00,2020-01-09,2023-01-01 12:00:00.1234567891,9.00,9",
+      "10,j,10,10.00,2020-01-10,2023-01-01T12:00:00,10.00,10",
+      "11,k,11,11.00,2020-01-11,\"2023-01-01 12:00:00,5\",11.00,11",
+      "12,l,12,12.00,2020-01-12,2024-02-30 12:00:00,12.00,12",
+      "13,m,13,13.00,2020-01-13,2023-01-01 24:00:00,13.00,13",
+      "14,n,14,14.00,2020-01-14, 2023-01-01 12:00:00,14.00,14",
+      "15,o,15,15.00,2020-01-15,2023-01-01 12:00:00 ,15.00,15",
+      "16,p,16,16.00,2020-01-16,2023-1-1 12:00:00,16.00,16",
+      "17,q,17,17.00,2020-01-17,2023-01-01 12:00,17.00,17",
+      "18,r,18,18.00,2020-01-18,2023-01-01,18.00,18")
     val ts = readRows(csv).map(_.getAs[LocalDateTime]("event_timestamp"))
     assert(ts(0) == LocalDateTime.parse("2023-01-01T12:00:00.123456"))
     assert(ts(1) == LocalDateTime.parse("2023-01-01T12:00:00.123456"))
     assert(ts(2) == LocalDateTime.parse("2023-01-01T12:00:00.123"))
     assert(ts(3) == LocalDateTime.parse("2023-01-01T12:00:00"))
+    assert(ts(4) == LocalDateTime.parse("2023-01-01T12:00:00.5"))
+    assert(ts(5) == LocalDateTime.parse("2023-01-01T12:00:00.12"))
+    assert(ts(6) == LocalDateTime.parse("2023-01-01T12:00:00.123456"))
+    assert(ts.drop(7).forall(_ == null), ts.drop(7).toSeq)
   }
 
   test("empty and whitespace-only cells → NULL (P7)") {

@@ -43,6 +43,10 @@ class PushdownSpec extends SparkSpec {
       plan)
   }
 
+  test("flagship SparkEntry.entry returns rows (driver smoke)") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("text stats read only doc_id + text from documents") {
     val plan = planOf(graft.ops.TextAnalysis.textStats(spark, sf))
     val read = scanLines(plan, "ReadSchema").mkString
